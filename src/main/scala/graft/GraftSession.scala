@@ -23,12 +23,52 @@ import org.apache.spark.sql.SparkSession
   *  - parquet nanos-as-long: tolerated for legacy TIMESTAMP(NANOS) data
   *    (harmless otherwise); the events table's encoding drift is handled
   *    schema-adaptively in [[graft.io.EventsReader]].
+  *  - generated-class cache of [[CodegenCacheEntries]] entries, not Spark's
+  *    100, and no stage number in generated class names. The cache is one
+  *    JVM-wide LRU map from generated source to compiled class. The engine
+  *    runs as chains of many small jobs that repeat: passes of a fit,
+  *    rounds of a loop, queries of a session. An LRU cache smaller than a
+  *    repeating working set evicts each class shortly before its next use,
+  *    so every lookup misses, and every pass pays Janino and then the JIT
+  *    for the same classes again.
+  *    Measured working sets, as Janino compiles from a cold JVM in local
+  *    mode (where a whole-stage pipeline compiles twice, for the driver's
+  *    and the executor's class loader): one `exact_and_sketch` benchmark
+  *    pass 126, one `dedup_allpairs` pass 174, one full sf0.1
+  *    `graft.Bench` pass (254 queries, one rep each) 3371. 2000 holds each
+  *    repeating working set more than ten times over. It does not hold the
+  *    whole query surface, which no session repeats as a unit (`Bench`
+  *    repeats each query back to back). At 100 entries every later
+  *    benchmark pass (control job, timed calls, output check) compiled 107
+  *    and 175 classes again; at 2000, 0 (exact) and 0–8 (dedup).
+  *    Memory, after GC: at the end of a `dedup_allpairs` run, metaspace
+  *    149.0 MB and heap 414 MB, against 148.6 and 411 MB at 100 entries.
+  *    After a full `graft.Bench` pass keeping all 3371 classes, metaspace
+  *    247.6 MB and heap 263 MB, against 220.4 and 168 MB at 100: about
+  *    8 KB of metaspace and 29 KB of heap per kept class, so at most about
+  *    17 MB and 60 MB at 2000.
+  *    `maxEntries` is a static conf that Spark's `CodeGenerator` reads
+  *    once per JVM, on first use, so it only takes effect from this
+  *    builder, before any session exists. Sessions built elsewhere
+  *    (`tools/LazyPlans`, `Explain`) keep Spark's 100.
+  *    `useIdInClassName` off: adaptive execution numbers whole-stage
+  *    pipelines as it plans query stages, in the order they become ready,
+  *    and with the number in the class name a renumbered pipeline is new
+  *    source. The n-gram Jaccard verify join's three exchange inputs are
+  *    numbered differently from run to run, and compiled again each time.
+  *    Without the number the cache key is the code alone.
   */
 object GraftSession {
+
+  /** Entries in Spark's JVM-wide generated-class cache
+    * (`spark.sql.codegen.cache.maxEntries`); see the knob list above. */
+  val CodegenCacheEntries: Int = 2000
 
   def builder(appName: String = "graft"): SparkSession.Builder =
     SparkSession.builder()
       .appName(appName)
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toLong)
+      .config("spark.sql.codegen.useIdInClassName", "false")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")

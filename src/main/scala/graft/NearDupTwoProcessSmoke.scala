@@ -53,7 +53,7 @@ object NearDupTwoProcessSmoke {
 
   // the forked JVM needs the same module opens the parent got from sbt's
   // javaOptions (Spark 4 on JDK 17 outside spark-submit)
-  private val addOpens = Seq(
+  private[graft] val addOpens = Seq(
     "java.base/java.lang", "java.base/java.lang.invoke",
     "java.base/java.lang.reflect", "java.base/java.io",
     "java.base/java.net", "java.base/java.nio",

@@ -609,7 +609,7 @@ final case class Hdbscan(
           }
         }
         out.iterator
-      }.persist()
+      }
 
     // ---- global merge over the union of local MSTs + boundary candidates.
     // Below `maxExactPoints`: collect the candidates and Kruskal on the
@@ -620,9 +620,25 @@ final case class Hdbscan(
     // collected, which the condensed-tree extraction — the reference's own
     // single-node Phase-3 — needs on the driver regardless. ----
     val useBoruvka = n > maxExactPoints
-    val coreRows = Hdbscan.tagged(spark) {
-      local.filter(_.kind == 0).map(o => (o.id, o.core)).collect()
-    }
+    // driver Kruskal reads the kernel frame once: one tagged collect of
+    // both row kinds, split on the driver (the split is stable, so each
+    // kind keeps its collect order). Borůvka reads it three times, so
+    // that branch persists it.
+    val (coreRows, localEdges) =
+      if (useBoruvka) {
+        local.persist()
+        (Hdbscan.tagged(spark) {
+          local.filter(_.kind == 0).map(o => (o.id, o.core)).collect()
+        }, Array.empty[(Long, Long, Double)])
+      } else {
+        val rows = Hdbscan.tagged(spark) {
+          local.map(o =>
+            if (o.kind == 0) (0, o.id, 0L, o.core) else (1, o.src, o.dst, o.weight)
+          ).collect()
+        }
+        val (cores, edges) = rows.partition(_._1 == 0)
+        (cores.map(r => (r._2, r._4)), edges.map(r => (r._2, r._3, r._4)))
+      }
     val tKernels = System.nanoTime()
     val idToIdx = coreRows.map(_._1).zipWithIndex.toMap
     val coreArr = coreRows.map(_._2)
@@ -639,9 +655,6 @@ final case class Hdbscan(
       }
     val mstGlobal =
       if (!useBoruvka) {
-        val localEdges = Hdbscan.tagged(spark) {
-          local.filter(_.kind == 1).map(o => (o.src, o.dst, o.weight)).collect()
-        }
         // below the maxExactPoints gate a driver Kruskal is fastest, and
         // collecting the boundary frame here is ≤ O(maxExactPoints) rows
         val boundaryEdges = Hdbscan.tagged(spark) {
@@ -690,7 +703,8 @@ final case class Hdbscan(
         edges.foreach(e => uf.union(e.src, e.dst))
         bridge(edges, uf, if (forest.nonEmpty) forest.map(_._3).max else 0.0)
       }
-    local.unpersist(); rot.close(); bndRot.close()
+    if (useBoruvka) local.unpersist()
+    rot.close(); bndRot.close()
 
     val tMerge = System.nanoTime()
     val consIdx = constraints.collect {

@@ -71,30 +71,40 @@ object HdbscanKernel {
     * point (k includes the point itself, matching the reference's
     * `calculateCoreDistances(dataSet, k, ...)` with `numNeighbors = k - 1`).
     * O(n^2 d) with a bounded insertion sort per point. k=1 → all zeros.
+    *
+    * Each unordered pair is evaluated once and its distance offered to both
+    * points' buffers: every [[Dist]] here is symmetric bit for bit, and
+    * point p still receives its distances in q order (q < p from earlier
+    * rows, then q > p), so the result equals the two-sided loop's exactly.
+    * Costs n·min(k-1, n-1) doubles of buffer.
     */
   def coreDistances(points: Array[Array[Double]], k: Int, dist: Dist): Array[Double] = {
     val n = points.length
     val out = new Array[Double](n)
     val numNeighbors = k - 1
     if (numNeighbors <= 0) return out
+    // point p's kNN distances: ascending insertion buffer knn(p*w until p*w+w)
+    val w = math.min(numNeighbors, math.max(n - 1, 1))
+    val knn = Array.fill(n * w)(Double.MaxValue)
+    // insert d if smaller than p's current worst
+    def offer(p: Int, d: Double): Unit = {
+      val lo = p * w
+      var i = lo + w - 1
+      if (d < knn(i)) {
+        while (i > lo && d < knn(i - 1)) { knn(i) = knn(i - 1); i -= 1 }
+        knn(i) = d
+      }
+    }
     var p = 0
     while (p < n) {
-      // kNN distances held in a descending-capped insertion buffer
-      val knn = Array.fill(math.min(numNeighbors, math.max(n - 1, 1)))(Double.MaxValue)
-      var q = 0
+      var q = p + 1
       while (q < n) {
-        if (q != p) {
-          val d = dist(points(p), points(q))
-          // insert d if smaller than current worst
-          if (d < knn(knn.length - 1)) {
-            var i = knn.length - 1
-            while (i > 0 && d < knn(i - 1)) { knn(i) = knn(i - 1); i -= 1 }
-            knn(i) = d
-          }
-        }
+        val d = dist(points(p), points(q))
+        offer(p, d); offer(q, d)
         q += 1
       }
-      out(p) = if (n - 1 < numNeighbors) knn(knn.length - 1) else knn(numNeighbors - 1)
+      // p's buffer is complete: rows q < p offered theirs already
+      out(p) = knn(p * w + w - 1)
       if (out(p) == Double.MaxValue) out(p) = 0.0 // degenerate: fewer points than k
       p += 1
     }

@@ -17,6 +17,8 @@ object SparkTestBase {
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.session.timeZone", "UTC")
+      // the suite's specs share one JVM, so one generated-class cache
+      .config("spark.sql.codegen.cache.maxEntries", GraftSession.CodegenCacheEntries.toLong)
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s

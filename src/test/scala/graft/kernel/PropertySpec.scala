@@ -67,6 +67,53 @@ object PropertySpec extends Properties("HdbscanKernel") {
       pts.indices.forall(i => c2(i) <= c4(i) + 1e-12)
     }
 
+  private val allDists = Seq("euclidean", "manhattan", "supremum", "cosine", "pearson")
+    .map(HdbscanKernel.distByName)
+
+  private def bits(x: Double): Long = java.lang.Double.doubleToRawLongBits(x)
+
+  // coarse integer coordinates: duplicate points and tied distances are
+  // common, and zero or constant vectors give cosine/pearson their NaNs
+  private val coarseVec: Gen[Array[Double]] =
+    Gen.containerOfN[Array, Double](3, Gen.choose(-2, 2).map(_.toDouble))
+
+  property("all five distances symmetric bit for bit") =
+    Prop.forAll(Gen.oneOf(Gen.zip(vecGen, vecGen), Gen.zip(coarseVec, coarseVec))) {
+      case (a, b) => allDists.forall(d => bits(d(a, b)) == bits(d(b, a)))
+    }
+
+  /** The two-sided core-distance loop: every ordered pair (p, q), q ≠ p. */
+  private def twoSidedCoreDistances(points: Array[Array[Double]], k: Int,
+      dist: HdbscanKernel.Dist): Array[Double] = {
+    val n = points.length
+    val numNeighbors = k - 1
+    Array.tabulate(n) { p =>
+      if (numNeighbors <= 0) 0.0 else {
+        val knn = Array.fill(math.min(numNeighbors, math.max(n - 1, 1)))(Double.MaxValue)
+        for (q <- 0 until n if q != p) {
+          val d = dist(points(p), points(q))
+          if (d < knn(knn.length - 1)) {
+            var i = knn.length - 1
+            while (i > 0 && d < knn(i - 1)) { knn(i) = knn(i - 1); i -= 1 }
+            knn(i) = d
+          }
+        }
+        val c = if (n - 1 < numNeighbors) knn(knn.length - 1) else knn(numNeighbors - 1)
+        if (c == Double.MaxValue) 0.0 else c
+      }
+    }
+  }
+
+  property("coreDistances equals the two-sided loop bit for bit") =
+    Prop.forAll(Gen.choose(0, 14).flatMap(n => Gen.listOfN(n, Gen.oneOf(coarseVec, coarseVec,
+      Gen.containerOfN[Array, Double](3, Gen.choose(-5.0, 5.0))))), Gen.choose(1, 9)) { (vs, k) =>
+      val pts = vs.toArray
+      allDists.forall { d =>
+        HdbscanKernel.coreDistances(pts, k, d).map(bits).sameElements(
+          twoSidedCoreDistances(pts, k, d).map(bits))
+      }
+    }
+
   property("MST total weight invariant under vertex relabeling") =
     Prop.forAll(Gen.listOfN(15, vecGen), Gen.choose(0L, Long.MaxValue)) { (vs, s) =>
       vs.size <= 2 || {
