@@ -1,8 +1,8 @@
 package graft.hdbscan
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.ArrayType
 import graft.kernel.HdbscanKernel
 import graft.kernel.HdbscanKernel.Edge
 import graft.operators.{CF, CFAggregator}
@@ -13,14 +13,16 @@ final case class Point(id: Long, features: Array[Double])
 /** One clustered output point. */
 final case class ClusteredPoint(id: Long, label: Int, outlier_score: Double, core_dist: Double)
 
-/** Mixed per-subset kernel output (edges + point results in one pass, the
-  * reference's key=-1 disambiguation trick done with a proper tag column). */
+/** One inter-subset boundary candidate carried on a split row: the edge to
+  * a round's second-nearest seed `dst`, at raw distance `w0`. */
+private[hdbscan] final case class Cand(dst: Long, w0: Double)
+
 /** One split-round assignment row: `subset` is the NEW cell (nearest seed,
-  * ties → lowest seed id), `seed2`/`d2` the second-nearest seed when the
-  * cell drew ≥ 2 seeds (the inter-subset boundary candidate edge). */
+  * ties → lowest seed id); `bnd` the point's boundary candidates so far, to
+  * which each round whose cell drew ≥ 2 seeds appends the second-nearest
+  * seed. `bnd` is null on the bubble route, which carries no candidates. */
 private[hdbscan] final case class AssignedRow(
-    subset: Long, id: Long, features: Array[Double],
-    seed2: Option[Long], d2: Option[Double])
+    subset: Long, id: Long, features: Array[Double], bnd: Array[Cand])
 
 object Hdbscan {
   /** Job-description tag on every action in the exact path that is
@@ -43,6 +45,8 @@ object Hdbscan {
   }
 }
 
+/** Mixed per-subset kernel output (edges + point results in one pass, the
+  * reference's key=-1 disambiguation trick done with a proper tag column). */
 private[hdbscan] final case class LocalOut(
     kind: Int, // 0 = point result, 1 = MST edge
     id: Long, label: Int, score: Double, core: Double,
@@ -303,9 +307,8 @@ final case class Hdbscan(
     import spark.implicits._
     val tStart = System.nanoTime()
     val rot = new graft.CheckpointRotator
-    val bndRot = new graft.CheckpointRotator
     val (assigned, boundary) =
-      voronoiSplit(pts, n, exactCellTarget, collectBoundary = true, rot, bndRot)
+      voronoiSplit(pts, n, exactCellTarget, collectBoundary = true, rot)
     // exact kernel per subset: local MST (global ids) + core distances —
     // the same flatMapGroups contract as exactGlobal
     val local = assigned.select(col("subset"), col("id"), col("features"))
@@ -404,7 +407,7 @@ final case class Hdbscan(
         col("outlier_score"), col("vcore").as("core_dist"))
       .localCheckpoint(true)
     local.unpersist(blocking = false)
-    rot.close(); bndRot.close()
+    rot.close()
     Console.err.println(f"[graft] exactDistributed phases: " +
       f"split+kernels=${(tSplit - tStart) / 1e9}%.1fs " +
       f"boruvka=${(tBoruvka - tSplit) / 1e9}%.1fs " +
@@ -421,158 +424,151 @@ final case class Hdbscan(
     * loop, Main.java:107-301, as a driver loop over DataFrames): every
     * round, cells above `2*fitSize` get fresh in-cell seeds and their
     * points are reassigned to the nearest one, until all cells fit.
-    * Shared by the partitioned-exact mode (fitSize = maxLocalSize,
-    * collectBoundary = true) and the multi-level bubble mode (fitSize =
-    * bubble cell target, no boundary edges — the bubble hierarchy builds a
-    * complete distance matrix on the driver instead).
+    * Shared by the partitioned-exact mode (collectBoundary = true) and the
+    * multi-level bubble mode (bubble cell target, no boundary edges).
     *
-    * When collectBoundary, per-point edges to the SECOND-nearest seed are
-    * accumulated as inter-subset boundary candidates — they reconnect
-    * clusters that a cell boundary cut (far tighter than seed-to-seed
-    * edges alone) — plus a per-parent seed MST so the cell-adjacency graph
-    * stays connected. The candidates stay DISTRIBUTED (a rotated
-    * DataFrame, O(n) rows) — the caller decides whether to collect them
-    * (driver Kruskal below `maxExactPoints`) or feed them straight into
-    * the distributed Borůvka merge; only O(#seeds) seed metadata ever
+    * A round runs one seed collect (1 job) and one oversized-cell count (2
+    * jobs under adaptive execution) whose full pass also fills the round's
+    * staged assignment. Round 1 splits the whole input, known from `n`, so
+    * nothing runs before it.
+    *
+    * When collectBoundary, each point's edges to its SECOND-nearest seed
+    * are inter-subset boundary candidates (they reconnect clusters a cell
+    * boundary cut), carried in the row's `bnd` column, plus a per-parent
+    * seed MST so the cell-adjacency graph stays connected. The candidates
+    * stay DISTRIBUTED: the caller collects them (driver Kruskal) or feeds
+    * them to the distributed Borůvka merge. Only O(#seeds) seed metadata
     * touches the driver here.
     *
-    * @return final assignment (subset, id, features) — a rotated frame
-    *         owned by `rot` (caller must `rot.close()` when done) — and
-    *         the boundary candidate edge frame (src, dst, w0; global ids),
-    *         owned by `bndRot`.
+    * @return final assignment (subset, id, features[, bnd]), staged by
+    *         `rot` (caller must `rot.close()` when done), and the boundary
+    *         candidate frame (src, dst, w0; global ids): exploded `bnd` ∪
+    *         the seed-MST rows, lazy over that assignment.
     */
   private def voronoiSplit(
       pts: Dataset[Point],
       n: Long,
       fitSize: Long,
       collectBoundary: Boolean,
-      rot: graft.CheckpointRotator,
-      bndRot: graft.CheckpointRotator): (DataFrame, DataFrame) = {
+      rot: graft.CheckpointRotator): (DataFrame, DataFrame) = {
     val spark = pts.sparkSession
     import spark.implicits._
-    var boundary = Seq.empty[(Long, Long, Double)].toDF("src", "dst", "w0")
-    var assigned = rot.rotate(pts.toDF()
-      .select(lit(Long.MinValue).as("subset"), col("id"), col("features")))
+    val bndType = ArrayType(Encoders.product[Cand].schema)
+    val keep = Seq(col("subset"), col("id"), col("features")) ++
+      (if (collectBoundary) Seq(col("bnd")) else Nil)
+    var assigned = pts.toDF()
+      .withColumn("subset", lit(Long.MinValue))
+      .withColumn("bnd", array().cast(bndType))
+      .select(keep: _*)
+    val seedMst = scala.collection.mutable.ArrayBuffer[(Long, Long, Double)]()
+    // (subset, count) of the cells past the 2x slack (a cell at (1..2]x
+    // fitSize costs at most 4x the kernel budget, cheaper than a round)
+    var oversized =
+      if (n > 2L * fitSize) Array((Long.MinValue, n)) else Array.empty[(Long, Long)]
     var iterNo = 0
-    var done = n <= fitSize
-    while (iterNo < 8 && !done) {
-      // 2x slack: a cell at (1..2]x fitSize costs at most 4x the kernel
-      // budget (still parallel), far cheaper than another full split round
-      val oversized = Hdbscan.tagged(spark, Hdbscan.BoundedCollectTag) {
+    while (iterNo < 8 && oversized.nonEmpty) {
+      val overSet = oversized.map(_._1).toSet
+      // deterministic hash-rate seed selection inside each oversized cell:
+      // base rate 1/(fitSize/4) ⇒ E[seeds] = 4*cnt/fitSize per cell, but
+      // capped at ~`branch` seeds per cell per round (geometric descent).
+      // Without the cap, splitting one huge cell into k final cells costs
+      // n×k distance evals in one round (measured 245k points → 2000
+      // bubble seeds = 490M evals); with it the work is n×branch per
+      // round and the cell count still multiplies by `branch` each round,
+      // so total work is n×branch×log_branch(k) — the reference's
+      // multi-level sampling loop has the same geometry (Main.java:107-301)
+      val branch = 256L
+      val maxCnt = oversized.map(_._2).max
+      val ratio = math.max(math.max(2L, fitSize / 4), maxCnt / branch)
+      val overDf = assigned.filter(col("subset").isInCollection(overSet))
+      val subSeeds = overDf
+        .filter(pmod(xxhash64(col("id"), lit(seed + iterNo)), lit(ratio)) === 0)
+        .select(col("subset"), col("id").as("seed_id"), col("features").as("seed_vec"))
+      // Seed metadata is the ONLY thing collected in the split loop —
+      // O(#seeds × dim) per round, the same bound as a broadcast-join
+      // build side. Per-point top-2 assignment then runs as a compiled
+      // per-partition scan against the broadcast seed arrays: one pass,
+      // no shuffle, and no per-point frame is ever broadcast or joined.
+      // (Two earlier plans are deliberately dead: collect_list(struct)
+      // top-2 falls out of hash aggregation past 128 groups — measured
+      // 8s → 1528s at 245k points — and the min/min join cascade
+      // broadcast O(n)-row argmin frames, a driver OOM at cluster
+      // scale.) Seeds are sorted by id so distance ties deterministically
+      // keep the lowest seed id at any parallelism.
+      val seedRows = Hdbscan.tagged(spark, Hdbscan.BoundedCollectTag) {
+        subSeeds.as[(Long, Long, Array[Double])].collect()
+      }
+      val seedArrays: Map[Long, Array[(Long, Array[Double])]] = seedRows
+        .groupBy(_._1)
+        .map { case (s, g) => s -> g.map(t => (t._2, t._3)).sortBy(_._1) }
+      val bSeeds = spark.sparkContext.broadcast(seedArrays)
+      val localDist = dist
+      val top2 = overDf
+        .select(col("subset"), col("id"), col("features"),
+          (if (collectBoundary) col("bnd") else lit(null).cast(bndType)).as("bnd"))
+        .as[AssignedRow]
+        .mapPartitions { it =>
+          val bySubset = bSeeds.value
+          val noSeeds = Array.empty[(Long, Array[Double])]
+          it.map { r =>
+            val seeds = bySubset.getOrElse(r.subset, noSeeds)
+            var bestId = -1L; var bestD = Double.MaxValue
+            var secId = -1L; var secD = Double.MaxValue
+            var i = 0
+            while (i < seeds.length) {
+              val d = localDist(r.features, seeds(i)._2)
+              if (d < bestD) { secId = bestId; secD = bestD; bestId = seeds(i)._1; bestD = d }
+              else if (d < secD) { secId = seeds(i)._1; secD = d }
+              i += 1
+            }
+            // a cell that drew zero seeds this round keeps its subset
+            // (retried next round with a different hash salt); the
+            // second-nearest seed joins the row's boundary candidates
+            AssignedRow(if (bestId >= 0) bestId else r.subset, r.id, r.features,
+              if (secId >= 0 && r.bnd != null) r.bnd :+ Cand(secId, secD) else r.bnd)
+          }
+        }
+      if (collectBoundary) {
+        // per-parent seed MST: guarantees the cell-adjacency graph stays
+        // connected (2nd-seed edges alone can island a region that owns
+        // several seeds); round 1's parent spans everything, so the union
+        // of all rounds' seed MSTs connects every cell transitively.
+        // Driver-sized by construction (reuses the seed rows collected
+        // above): O(#seeds this round) rows.
+        seedRows.groupBy(_._1).values.filter(_.length > 1).foreach { group =>
+          val arr = group.sortBy(_._2)
+          val m = arr.length
+          val w = Array.tabulate(m, m)((i, j) =>
+            if (i == j) 0.0 else dist(arr(i)._3, arr(j)._3))
+          seedMst ++= HdbscanKernel.primMstMatrix(w)
+            .map(e => (arr(e.src)._2, arr(e.dst)._2, e.weight))
+        }
+      }
+      // stage, then count: the next round's count is the full pass that
+      // fills the staged assignment, then retire() frees the previous one.
+      // The staged frame is a flat scan of its blocks, so the logical plan
+      // stays truncated per round (the reference's object-file checkpoints,
+      // Main.java:101,199,298) — without it the union-of-filters lineage
+      // grows exponentially and even plan-string generation stalls.
+      assigned = rot.stage(assigned.filter(!col("subset").isInCollection(overSet))
+        .unionAll(top2.toDF().select(keep: _*)))
+      oversized = Hdbscan.tagged(spark, Hdbscan.BoundedCollectTag) {
         assigned.groupBy(col("subset")).agg(count(lit(1)).as("cnt"))
           .filter(col("cnt") > 2L * fitSize)
           .as[(Long, Long)].collect()
       }
-      if (oversized.isEmpty) done = true
-      else {
-        val overSet = oversized.map(_._1).toSet
-        // deterministic hash-rate seed selection inside each oversized cell:
-        // base rate 1/(fitSize/4) ⇒ E[seeds] = 4*cnt/fitSize per cell, but
-        // capped at ~`branch` seeds per cell per round (geometric descent).
-        // Without the cap, splitting one huge cell into k final cells costs
-        // n×k distance evals in one round (measured 245k points → 2000
-        // bubble seeds = 490M evals); with it the work is n×branch per
-        // round and the cell count still multiplies by `branch` each round,
-        // so total work is n×branch×log_branch(k) — the reference's
-        // multi-level sampling loop has the same geometry (Main.java:107-301)
-        val branch = 256L
-        val maxCnt = oversized.map(_._2).max
-        val ratio = math.max(math.max(2L, fitSize / 4), maxCnt / branch)
-        val overDf = assigned.filter(col("subset").isInCollection(overSet))
-        val subSeeds = overDf
-          .filter(pmod(xxhash64(col("id"), lit(seed + iterNo)), lit(ratio)) === 0)
-          .select(col("subset"), col("id").as("seed_id"), col("features").as("seed_vec"))
-        // Seed metadata is the ONLY thing collected in the split loop —
-        // O(#seeds × dim) per round, the same bound as a broadcast-join
-        // build side. Per-point top-2 assignment then runs as a compiled
-        // per-partition scan against the broadcast seed arrays: one pass,
-        // no shuffle, and no per-point frame is ever broadcast or joined.
-        // (Two earlier plans are deliberately dead: collect_list(struct)
-        // top-2 falls out of hash aggregation past 128 groups — measured
-        // 8s → 1528s at 245k points — and the min/min join cascade
-        // broadcast O(n)-row argmin frames, a driver OOM at cluster
-        // scale.) Seeds are sorted by id so distance ties deterministically
-        // keep the lowest seed id at any parallelism.
-        val seedRows = Hdbscan.tagged(spark, Hdbscan.BoundedCollectTag) {
-          subSeeds.as[(Long, Long, Array[Double])].collect()
-        }
-        val seedArrays: Map[Long, Array[(Long, Array[Double])]] = seedRows
-          .groupBy(_._1)
-          .map { case (s, g) => s -> g.map(t => (t._2, t._3)).sortBy(_._1) }
-        val bSeeds = spark.sparkContext.broadcast(seedArrays)
-        val localDist = dist
-        val top2 = overDf.select(col("subset"), col("id"), col("features"))
-          .as[(Long, Long, Array[Double])]
-          .mapPartitions { it =>
-            val bySubset = bSeeds.value
-            val noSeeds = Array.empty[(Long, Array[Double])]
-            it.map { case (sub, id, feats) =>
-              val seeds = bySubset.getOrElse(sub, noSeeds)
-              var bestId = -1L; var bestD = Double.MaxValue
-              var secId = -1L; var secD = Double.MaxValue
-              var i = 0
-              while (i < seeds.length) {
-                val d = localDist(feats, seeds(i)._2)
-                if (d < bestD) { secId = bestId; secD = bestD; bestId = seeds(i)._1; bestD = d }
-                else if (d < secD) { secId = seeds(i)._1; secD = d }
-                i += 1
-              }
-              // a cell that drew zero seeds this round keeps its subset
-              // (retried next round with a different hash salt)
-              AssignedRow(if (bestId >= 0) bestId else sub, id, feats,
-                if (secId >= 0) Some(secId) else None,
-                if (secId >= 0) Some(secD) else None)
-            }
-          }.persist()
-        if (collectBoundary) {
-          // 2nd-seed candidates stay distributed: selected out of the
-          // persisted top2 frame and eagerly rotated into the accumulated
-          // boundary frame below — never collected here (driver Kruskal
-          // below `maxExactPoints` collects the final frame; the Borůvka
-          // path never does)
-          val secondEdges = top2.filter(col("seed2").isNotNull)
-            .select(col("id").as("src"), col("seed2").as("dst"), col("d2").as("w0"))
-          // per-parent seed MST: guarantees the cell-adjacency graph stays
-          // connected (2nd-seed edges alone can island a region that owns
-          // several seeds); round 1's parent spans everything, so the union
-          // of all rounds' seed MSTs connects every cell transitively.
-          // Driver-sized by construction (reuses the seed rows collected
-          // above): O(#seeds this round) rows.
-          val seedMstBuf = scala.collection.mutable.ArrayBuffer[(Long, Long, Double)]()
-          seedRows.groupBy(_._1).values.filter(_.length > 1).foreach { group =>
-            val arr = group.sortBy(_._2)
-            val m = arr.length
-            val w = Array.tabulate(m, m)((i, j) =>
-              if (i == j) 0.0 else dist(arr(i)._3, arr(j)._3))
-            seedMstBuf ++= HdbscanKernel.primMstMatrix(w)
-              .map(e => (arr(e.src)._2, arr(e.dst)._2, e.weight))
-          }
-          boundary = bndRot.rotate(boundary
-            .unionAll(secondEdges)
-            .unionAll(seedMstBuf.toSeq.toDF("src", "dst", "w0")))
-        }
-        // rotate: truncates the logical plan per round (the reference's
-        // object-file checkpoints, Main.java:101,199,298, served the same
-        // purpose) — without it the union-of-filters lineage grows
-        // exponentially and even plan-string generation stalls the driver.
-        // rotate() is eager, so the old round's blocks are freed immediately.
-        assigned = rot.rotate(assigned.filter(!col("subset").isInCollection(overSet))
-          .unionAll(top2.select(col("subset"), col("id"), col("features"))))
-        top2.unpersist()
-        // free the round's seed-array blocks now rather than waiting for
-        // ContextCleaner GC (ADVICE r4: up to 8 per-round broadcasts
-        // otherwise accumulate across a fit). unpersist, NOT destroy: the
-        // rotate() above persists top2's derived RDD but its LINEAGE still
-        // references this broadcast, and Spark re-serializes the full RDD
-        // graph on every later job over the rotated frame — serializing a
-        // destroyed broadcast throws TaskNotSerializable (verified:
-        // HdbscanSpec fails with destroy() here). unpersist keeps the
-        // driver-side value (re-broadcastable, serializable) while dropping
-        // the executor copies each round.
-        bSeeds.unpersist(blocking = false)
-        iterNo += 1
-      }
+      rot.retire()
+      // free the round's seed-array blocks now, not at ContextCleaner GC.
+      // unpersist, NOT destroy: the staged frame's lineage still holds this
+      // broadcast and Spark re-serializes it on every later job over it
+      // (destroy() throws TaskNotSerializable — verified with HdbscanSpec).
+      bSeeds.unpersist(blocking = false)
+      iterNo += 1
     }
+    val seedMstDf = seedMst.toSeq.toDF("src", "dst", "w0")
+    val boundary =
+      if (!collectBoundary || iterNo == 0) seedMstDf
+      else assigned.select(col("id").as("src"), inline(col("bnd"))).unionAll(seedMstDf)
     (assigned, boundary)
   }
 
@@ -582,9 +578,8 @@ final case class Hdbscan(
     import spark.implicits._
     val tStart = System.nanoTime()
     val rot = new graft.CheckpointRotator
-    val bndRot = new graft.CheckpointRotator
     val (assigned, boundary) =
-      voronoiSplit(pts, n, exactCellTarget, collectBoundary = true, rot, bndRot)
+      voronoiSplit(pts, n, exactCellTarget, collectBoundary = true, rot)
     val tSplit = System.nanoTime()
 
     // ---- exact kernel per subset: local MST (global ids) + core distances ----
@@ -704,7 +699,7 @@ final case class Hdbscan(
         bridge(edges, uf, if (forest.nonEmpty) forest.map(_._3).max else 0.0)
       }
     if (useBoruvka) local.unpersist()
-    rot.close(); bndRot.close()
+    rot.close()
 
     val tMerge = System.nanoTime()
     val consIdx = constraints.collect {
@@ -745,9 +740,7 @@ final case class Hdbscan(
     val tStart = System.nanoTime()
     val fitSize = math.max(4L, math.ceil(4.0 * n / sampleCap).toLong)
     val rot = new graft.CheckpointRotator
-    val bndRot = new graft.CheckpointRotator
-    val (assigned, _) = voronoiSplit(pts, n, fitSize, collectBoundary = false, rot, bndRot)
-    bndRot.close() // no boundary edges on the bubble path
+    val (assigned, _) = voronoiSplit(pts, n, fitSize, collectBoundary = false, rot)
     val tSplit = System.nanoTime()
 
     // ---- CF-bubble aggregation: one shuffle, map-side combine ----
@@ -769,7 +762,7 @@ final case class Hdbscan(
       // local[32] produced label-renumbered twins before this)
       .sortBy(_._1)
 
-    // narrow (bubble, point) map outlives the rotated split frames: it is
+    // narrow (bubble, point) map outlives the staged split frames: it is
     // the only thing the final label join needs
     val (idMap, _) = org.apache.spark.sql.GraftShim.materialize(
       assigned.select(col("subset").as("sample_id"), col("id")))

@@ -23,15 +23,6 @@ object GraftShim {
     ext.registerFunctions(spark.sessionState.functionRegistry)
   }
 
-  /** Eagerly materialize `df` into cached executor blocks and return a
-    * DataFrame reading those blocks, plus the handle needed to free them.
-    *
-    * Unlike `Dataset.localCheckpoint` the lineage is NOT truncated, so
-    * unpersisting after a later rotation is always safe (recompute falls
-    * back to the original plan instead of failing); unlike `persist` the
-    * consumer plan is a flat scan of the blocks, so iterative drivers
-    * don't accumulate an ever-growing logical plan.
-    */
   /** Flush the async listener bus so a test's `SparkListener` has seen
     * every event from work submitted before this call. */
   def drainListenerBus(spark: SparkSession): Unit =
@@ -55,6 +46,15 @@ object GraftShim {
   def sizeEstimate(df: DataFrame): BigInt =
     df.queryExecution.optimizedPlan.stats.sizeInBytes
 
+  /** Eagerly materialize `df` into cached executor blocks and return a
+    * DataFrame reading those blocks, plus the handle needed to free them.
+    *
+    * Unlike `Dataset.localCheckpoint` the lineage is NOT truncated, so
+    * unpersisting after a later rotation is always safe (recompute falls
+    * back to the original plan instead of failing); unlike `persist` the
+    * consumer plan is a flat scan of the blocks, so iterative drivers
+    * don't accumulate an ever-growing logical plan.
+    */
   def materialize(df: DataFrame): (DataFrame, RDD[_]) = {
     val (out, rdd, _) = materializeCounted(df)
     (out, rdd)
